@@ -33,35 +33,14 @@ from pyspark.sql import functions as F
 
 
 def _canon_edges(edges: DataFrame) -> DataFrame:
+    """(src, dst) with src < dst, self-loops dropped.  Duplicates are
+    kept: the first CC round's aggregation removes them."""
     return (
         edges
         .select(F.least("record_id_1", "record_id_2").alias("src"),
                 F.greatest("record_id_1", "record_id_2").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
     )
-
-
-def _is_star_forest(e: DataFrame) -> bool:
-    """Sound fixed-point confirmation for the CC loop: the edge set is
-    a valid star forest iff (i) no edge's src is another edge's dst
-    (roots are not leaves) AND (ii) every leaf hangs under exactly one
-    root.  (i) alone accepts states like ``{(1,5),(2,5)}`` — two stars
-    sharing a leaf, where roots 1 and 2 still need merging (ADVICE r3).
-    Both probes union into ONE limit-1 job over a checkpointed frame,
-    run at most once per convergence event (each Spark action is a
-    serial driver round trip — the CC loop's job count is pure overhead
-    at any scale)."""
-    one = F.lit(1).alias("__bad")
-    roots_as_leaves = (
-        e.join(e.select(F.col("dst").alias("src")), "src", "semi")
-        .select(one).limit(1))
-    shared_leaves = (
-        e.groupBy("dst")
-        .agg(F.count_distinct("src").alias("__k"))
-        .filter(F.col("__k") > 1)
-        .select(one).limit(1))
-    return roots_as_leaves.unionAll(shared_leaves).limit(1).count() == 0
 
 
 def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
@@ -71,39 +50,28 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
     ``edges``: record_id_1/record_id_2 pairs.  ``nodes``: optional
     (record_id) table; nodes without edges become singleton clusters
     (``cluster.py:383-429``).  Converges in O(log n) rounds; each round
-    is two shuffles.  Plans are cut with ``localCheckpoint`` every round
-    — the iterative-join lineage would otherwise grow exponentially.
+    is three shuffles.  Plans are cut with ``localCheckpoint`` every
+    round — the iterative-join lineage would otherwise grow
+    exponentially.
+
+    Convergence is exact: a round is a deterministic function of its
+    input edge set, so the loop stops at the first round whose output
+    set equals its input set, and a fixed point of large-star followed
+    by small-star is a star forest rooted at each component's minimum
+    id (``tests/test_cluster.py`` checks this against union-find).
     """
-    spark = edges.sparkSession
-
-    def _sig_of(df: DataFrame) -> tuple:
-        """Order-independent (count, hash) signature.  The frame is a
-        LAZY localCheckpoint: this agg is the action that materializes
-        it, so checkpoint + signature cost ONE job per round instead of
-        two (the loop's per-round job count is a serial driver barrier
-        at any scale)."""
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.sum(F.pmod(F.xxhash64("src", "dst"),
-                         F.lit(1_000_000_007))).alias("h")).collect()[0]
-        return (row["n"], row["h"])
-
-    e = _canon_edges(edges).localCheckpoint(eager=False)
-    # signature of the INPUT edge set: an already-converged graph (all
-    # star forests — e.g. must-link stars, tiny components) is detected
-    # after ONE round instead of two
-    prev_sig = _sig_of(e)
-
     from pyspark.sql.window import Window
     w_src = Window.partitionBy("src")
+    e = _canon_edges(edges)
     for _ in range(max_iter):
         # Each star op attaches min(N(u)) via a WINDOW over src (one
         # exchange + sort) instead of the r1-r5 groupBy-then-join form,
         # which shuffled the nbrs subtree TWICE per star (once into the
-        # aggregate, once into the join) — 4 exchanges per round become
-        # 2, measured 11.0 s → 7.9 s warm for the sf0.1 CC with an
-        # identical assignment.
-        # ---- large-star: connect every neighbor > u to min(N(u) ∪ {u})
+        # aggregate, once into the join) — measured 11.0 s → 7.9 s warm
+        # for the sf0.1 CC with an identical assignment.
+        # ---- large-star: connect every neighbor > u to min(N(u) ∪ {u});
+        # its duplicates need no distinct of their own (the small-star
+        # min is idempotent, and the round's aggregation dedups)
         nbrs = e.union(e.select(F.col("dst").alias("src"),
                                 F.col("src").alias("dst")))
         large = (
@@ -113,7 +81,6 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
             .filter(F.col("dst") > F.col("src"))
             .select(F.col("mn").alias("src"), F.col("dst"))
             .filter(F.col("src") != F.col("dst"))
-            .distinct()
         )
         # ---- small-star: connect every neighbor <= u (and u) to min
         dir_e = large.select(
@@ -128,28 +95,24 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
             .filter(F.col("src") != F.col("dst"))
             .select(F.least("src", "dst").alias("src"),
                     F.greatest("src", "dst").alias("dst"))
-            .distinct()
+        )
+        # ONE aggregation dedups the round's edges AND diffs them
+        # against its input: bit 1 = in the input, bit 2 = in the
+        # output.  Any edge without both bits means the set changed; the
+        # take(1) probe is also the action that materializes the
+        # checkpoint (the aggregation's shuffle runs when AQE plans the
+        # checkpoint), so the exact test is one small job per round.
+        diff = (
+            new_e.withColumn("__in", F.lit(2))
+            .unionByName(e.withColumn("__in", F.lit(1)))
+            .groupBy("src", "dst").agg(F.bit_or("__in").alias("__in"))
             .localCheckpoint(eager=False)
         )
-        # convergence = the edge set is a fixed point: the signature agg
-        # doubles as the checkpoint-materializing action (see _sig_of),
-        # compared against the previous round — replaces the earlier
-        # self-join probe, which cost two extra shuffles per round
-        # (VERDICT r1 "what's wrong" #7)
-        sig = _sig_of(new_e)
-        e = new_e
-        if sig == prev_sig:
-            # The signature is probabilistic (collision ~1e-9/round);
-            # confirm the fixed point with a sound check (run once).
-            if _is_star_forest(e):
-                converged = True
-                break
-            # collision — edge sets differed despite equal signatures;
-            # keep iterating
-        prev_sig = sig
+        changed = bool(diff.filter(F.col("__in") != 3).take(1))
+        e = diff.filter(F.col("__in") >= 2).select("src", "dst")
+        if not changed:
+            break
     else:
-        converged = _is_star_forest(e)
-    if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} "
             "rounds — component diameter exceeds 2^max_iter or the "
@@ -515,73 +478,77 @@ def constrained_clusters(potential_edges: DataFrame,
             F.col("cluster_id").alias("component_id"))
     dirty_comps = dirty_comps.localCheckpoint(eager=False)
 
-    clean_assign = comp.join(
-        dirty_comps.withColumnRenamed("component_id", "cluster_id"),
-        "cluster_id", "left_anti")
+    n_oversized = n_oversized_records = 0
+    if not dirty_comps.take(1):
+        # every component is clean: the CC result is final (column
+        # order as the replay path's join puts it)
+        assigned = comp.select("cluster_id", "record_id")
+    else:
+        # skew guard: replaying a component needs it to fit in one
+        # worker.  Oversized dirty components fall back to unconstrained
+        # CC — that fallback can ship constraint-violating mega-clusters,
+        # so it is NEVER silent: counted into ``metrics`` and logged as a
+        # warning (VERDICT r3 "what's wrong" #2).  At sane uid quality
+        # the count is 0 and the probe is one cheap job over the
+        # per-component sizes.
+        replay_comps, oversized_assign = dirty_comps, None
+        ov_dirty = (
+            edges_c.groupBy("component_id")
+            .agg(F.count("*").alias("__n"))
+            .filter(F.col("__n") > max_component)
+            .join(dirty_comps, "component_id", "left_semi")
+            .select("component_id")
+            .localCheckpoint(eager=False))
+        n_oversized = ov_dirty.count()
+        if n_oversized > 0:
+            replay_comps = dirty_comps.join(ov_dirty, "component_id",
+                                            "left_anti")
+            oversized_assign = comp.join(
+                ov_dirty.withColumnRenamed("component_id", "cluster_id"),
+                "cluster_id", "left_semi")
+            n_oversized_records = oversized_assign.count()
+            import logging
+            logging.getLogger(__name__).warning(
+                "constrained_clusters: %d dirty component(s) exceed "
+                "max_component=%d (%d records) — falling back to "
+                "UNCONSTRAINED connected components for them; "
+                "uid/eid/user constraints are NOT enforced inside "
+                "these clusters",
+                n_oversized, max_component, n_oversized_records)
 
-    # skew guard: replaying a component needs it to fit in one worker
-    comp_sizes = edges_c.groupBy("component_id").agg(
-        F.count("*").alias("__n"))
-    oversized = comp_sizes.filter(F.col("__n") > max_component)
-
-    dirty_edges = (
-        edges_c.join(dirty_comps, "component_id", "left_semi")
-        .join(oversized.select("component_id"), "component_id",
-              "left_anti")
-    )
-    # records side of the cogroup: per-record constraint columns for
-    # every member of a replayed component (reference looks record
-    # attributes up in the all-names table, ``cluster.py:485-487``)
-    dirty_recs = (
-        comp.withColumnRenamed("cluster_id", "component_id")
-        .join(dirty_comps, "component_id", "left_semi")
-        .join(oversized.select("component_id"), "component_id",
-              "left_anti")
-        .join(all_names.select("record_id", *cols), "record_id")
-    )
-    replay = _cogroup_replay_factory(leven_thresh, constraints,
-                                     eid_col=eid_col,
-                                     allow_multiple_uids=allow_multiple_uids,
-                                     uid_cols=uid_avail or None)
-    replayed = (
-        dirty_edges.groupBy("component_id")
-        .cogroup(dirty_recs.groupBy("component_id"))
-        .applyInPandas(replay, "record_id string, cluster_id string")
-        .select("record_id", "cluster_id")
-    )
-    # oversized dirty components fall back to unconstrained CC — that
-    # fallback can ship constraint-violating mega-clusters, so it is
-    # NEVER silent: counted into ``metrics`` and logged as a warning
-    # (VERDICT r3 "what's wrong" #2).  At sane uid quality the count
-    # is 0 and the probe is one cheap job over the per-component sizes.
-    oversized_assign = (
-        comp.join(dirty_comps.withColumnRenamed("component_id",
-                                                "cluster_id"),
-                  "cluster_id", "left_semi")
-        .join(oversized.withColumnRenamed("component_id", "cluster_id"),
-              "cluster_id", "left_semi")
-    )
-    ov_dirty = oversized.join(dirty_comps, "component_id", "left_semi")
-    n_oversized = ov_dirty.count()
-    n_oversized_records = 0
-    if n_oversized > 0:
-        n_oversized_records = oversized_assign.count()
-        import logging
-        logging.getLogger(__name__).warning(
-            "constrained_clusters: %d dirty component(s) exceed "
-            "max_component=%d (%d records) — falling back to "
-            "UNCONSTRAINED connected components for them; uid/eid/user "
-            "constraints are NOT enforced inside these clusters",
-            n_oversized, max_component, n_oversized_records)
+        clean_assign = comp.join(
+            dirty_comps.withColumnRenamed("component_id", "cluster_id"),
+            "cluster_id", "left_anti")
+        dirty_edges = edges_c.join(replay_comps, "component_id",
+                                   "left_semi")
+        # records side of the cogroup: per-record constraint columns for
+        # every member of a replayed component (reference looks record
+        # attributes up in the all-names table, ``cluster.py:485-487``)
+        dirty_recs = (
+            comp.withColumnRenamed("cluster_id", "component_id")
+            .join(replay_comps, "component_id", "left_semi")
+            .join(all_names.select("record_id", *cols), "record_id")
+        )
+        replay = _cogroup_replay_factory(
+            leven_thresh, constraints, eid_col=eid_col,
+            allow_multiple_uids=allow_multiple_uids,
+            uid_cols=uid_avail or None)
+        replayed = (
+            dirty_edges.groupBy("component_id")
+            .cogroup(dirty_recs.groupBy("component_id"))
+            .applyInPandas(replay, "record_id string, cluster_id string")
+            .select("record_id", "cluster_id")
+        )
+        assigned = clean_assign.unionByName(replayed)
+        if oversized_assign is not None:
+            assigned = assigned.unionByName(oversized_assign)
+        # assigned appears twice in the final plan (singleton anti-join
+        # + union arm), three times with eids — checkpoint so the replay
+        # cogroup and its upstream run once
+        assigned = assigned.localCheckpoint(eager=False)
     if metrics is not None:
         metrics["oversized_components"] = n_oversized
         metrics["oversized_records"] = n_oversized_records
-
-    # assigned appears twice in the final plan (singleton anti-join +
-    # union arm), three times with eids — checkpoint so the replay
-    # cogroup and its upstream run once
-    assigned = clean_assign.unionByName(replayed).unionByName(
-        oversized_assign).localCheckpoint(eager=False)
 
     singles = (
         all_names.filter(F.col("drop_from_nm") == 0)

@@ -108,7 +108,8 @@ def train_match_model(data_rows: DataFrame,
                       beta: float = 0.5,
                       default_threshold: float = 0.5,
                       weight_col: str | None = None,
-                      grid_min_instances: list[int] | None = None
+                      grid_min_instances: list[int] | None = None,
+                      n_labeled: int | None = None
                       ) -> MatchModel:
     """M1 + W5 + W6 + M5 — fit the RF on labeled pairs, pick the
     F_beta-optimal threshold on a held-out split.
@@ -128,15 +129,22 @@ def train_match_model(data_rows: DataFrame,
     (default [25], the reference grid's usual winner) skips the CV —
     the bench/contract configuration, where the 6 extra fits would
     only re-pick 25.
+    ``n_labeled``: the labeled-row count of ``data_rows`` when the
+    caller already has it (``train_model_set`` counts once for both
+    fits); counted here otherwise.
     """
     if feature_cols is None:
         feature_cols = FEATURE_COLS
     labeled = data_rows.filter(F.col("label") != "")
-    n_labeled = labeled.count()
+    if n_labeled is None:
+        n_labeled = labeled.count()
     if n_labeled > MAX_MATCH_TRAIN_N:
         labeled = labeled.sample(MAX_MATCH_TRAIN_N / n_labeled, seed=SEED)
-    labeled = labeled.withColumn(
-        "y", (F.col("label") == "1").cast("double"))
+    # binary nominal label metadata: MLlib reads the class count from it
+    # instead of probing the data for the largest label (one job per fit)
+    labeled = labeled.select("*", (F.col("label") == "1").cast("double")
+                             .alias("y", metadata={"ml_attr": {
+                                 "type": "nominal", "num_vals": 2}}))
     # deterministic hash split (stable across re-evaluations, unlike rand)
     bucket = F.pmod(F.xxhash64(F.col("dr_id"), F.lit(SEED)), F.lit(10))
     train = labeled.filter(bucket < int(PCT_TRAIN * 10))
@@ -319,7 +327,12 @@ def train_model_set(data_rows: DataFrame,
     features exist) the missingness model.  Same training universe for
     both (the reference's explicit assumption, ``fit_model.py:583``);
     the missingness model simply excludes ``var_<field>_*`` from its
-    feature vector and starts from a boosted default threshold."""
+    feature vector and starts from a boosted default threshold.
+
+    ``data_rows`` is expected to be materialized: a stage output (a
+    parquet checkpoint or ``localCheckpoint``) or a cached frame.  The
+    two fits read it from concurrent threads, and a lazy frame would
+    recompute its full feature lineage in each (X16)."""
     if feature_cols is None:
         feature_cols = FEATURE_COLS
     fits: dict[str, dict] = {"basic": dict(
@@ -338,24 +351,19 @@ def train_model_set(data_rows: DataFrame,
         # depth-sequential tree-building jobs interleave instead of
         # serializing (RF training is latency-bound: ~maxDepth small
         # jobs per fit).  Results are bit-identical to sequential fits
-        # (fixed seeds, unchanged partitioning).  Materialize the
-        # shared input FIRST: two threads against a cold cache would
-        # each recompute the full feature lineage (X16).
-        cached_here = not data_rows.is_cached
-        if cached_here:
-            data_rows.cache()
-        data_rows.count()
+        # (fixed seeds, unchanged partitioning).  Both threads scan
+        # ``data_rows``, so it must be materialized (see the docstring).
+        # The labeled count both fits need is counted once.
+        n_labeled = data_rows.filter(F.col("label") != "").count()
         from concurrent.futures import ThreadPoolExecutor
         with ThreadPoolExecutor(max_workers=len(fits)) as ex:
             futures = {
                 name: ex.submit(
                     train_match_model, data_rows, num_trees=num_trees,
                     beta=beta, grid_min_instances=grid_min_instances,
-                    **kw)
+                    n_labeled=n_labeled, **kw)
                 for name, kw in fits.items()}
             models = {name: f.result() for name, f in futures.items()}
-        if cached_here:
-            data_rows.unpersist()
     else:
         models = {name: train_match_model(
             data_rows, num_trees=num_trees, beta=beta,

@@ -5,6 +5,7 @@ replay (uid conflicts block merges; leven_thresh tolerates near uids)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from namematch_spark.operators.cluster import (connected_components,
                                                constrained_clusters)
@@ -52,6 +53,29 @@ def test_uid_conflict_blocks_merge(spark):
                edges, _ml_empty(spark), an).collect()}
     assert res["A"] == res["B"]          # higher phat merges first
     assert res["C"] != res["A"]          # blocked by uid conflict
+
+
+def test_oversized_dirty_component_falls_back_to_cc(spark):
+    # the uid-conflict chain A-B-C (2 edges) and D-E-F (3 edges, one a
+    # duplicate) are both dirty; with max_component=2 only D-E-F is
+    # oversized: it keeps its unconstrained CC id and is reported,
+    # while A-B-C is still split by the replay
+    an = _an(spark, [("A", "1", 0), ("B", "", 0), ("C", "2", 0),
+                     ("D", "1", 0), ("E", "", 0), ("F", "2", 0)])
+    edges = _edges(spark, [
+        ("A__B", "A", "B", "1", "", 0, 0.95),
+        ("B__C", "B", "C", "", "2", 0, 0.90),
+        ("D__E", "D", "E", "1", "", 0, 0.95),
+        ("E__F", "E", "F", "", "2", 0, 0.90),
+        ("E__F2", "E", "F", "", "2", 0, 0.85)])
+    metrics: dict = {}
+    res = {r["record_id"]: r["cluster_id"]
+           for r in constrained_clusters(
+               edges, _ml_empty(spark), an, max_component=2,
+               metrics=metrics).collect()}
+    assert res["A"] == res["B"] != res["C"]
+    assert res["D"] == res["E"] == res["F"] == "D"
+    assert metrics == {"oversized_components": 1, "oversized_records": 3}
 
 
 def test_allow_multiple_uids_admits_flipped0(spark):
@@ -301,3 +325,41 @@ def test_min_id_convention(spark):
     res = {r["record_id"]: r["cluster_id"]
            for r in connected_components(edges).collect()}
     assert set(res.values()) == {"B"}
+
+
+def _union_find_min(edges: list[tuple[str, str]]) -> dict[str, str]:
+    """Reference components: union-find, each labeled by its min id."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def _path(n: int) -> list[tuple[str, str]]:
+    """A path through n nodes in scrambled id order: its diameter makes
+    the star rounds take several iterations to converge."""
+    ids = [f"n{(i * 37) % n:03d}" for i in range(n)]
+    return list(zip(ids, ids[1:]))
+
+
+@pytest.mark.parametrize("edges", [
+    _path(97),
+    # two stars sharing a leaf: roots 1 and 2 still need merging
+    [("1", "5"), ("2", "5")],
+    # already a star forest rooted at each component's min id
+    [("1", "2"), ("1", "3"), ("1", "4"), ("6", "7"), ("6", "8")],
+], ids=["long_path", "stars_sharing_a_leaf", "star_forest"])
+def test_cc_converges_to_union_find(spark, edges):
+    """The CC loop stops at the first round whose output edge set equals
+    its input; that fixed point must be the true components."""
+    df = spark.createDataFrame(edges, EDGE_SCHEMA)
+    got = {r["record_id"]: r["cluster_id"]
+           for r in connected_components(df).collect()}
+    assert got == _union_find_min(edges)

@@ -4,6 +4,9 @@ checkpoint/resume semantics."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
@@ -97,7 +100,6 @@ def test_clusters_det_golden_fixture(spark):
     fixture exactly — regression protection for the greedy replay,
     CC, veto and triage, independent of the driver's oracle run."""
     import csv
-    import os
     import __spark_entry__ as E
     got = {r["record_id"]: r["cluster_id"]
            for r in E.q_er_clusters_det(spark, SF_SMALL).collect()}
@@ -147,6 +149,34 @@ def test_checkpoint_append(spark, tmp_path):
     assert out.count() == 25
     assert ck.manifest["stream_stage"]["rows"] == 25
     assert ck.manifest["stream_stage"]["batches"] == 2
+    # the entry keeps one lineage row per data file, tagged with the
+    # batch that wrote it
+    parts = ck.manifest["stream_stage"]["partitions"]
+    assert {b: sum(p["rows"] for p in parts if p["batch"] == b)
+            for b in (1, 2)} == {1: 10, 2: 15}
+    assert sorted(p["file"] for p in parts) == sorted(
+        f for f in os.listdir(ck.stage_path("stream_stage"))
+        if f.startswith("part-")
+        and pq.read_metadata(os.path.join(ck.stage_path("stream_stage"),
+                                          f)).num_rows > 0)
+
+
+def test_checkpoint_append_counts_uncommitted_files(spark, tmp_path):
+    # a run killed after Spark committed a batch but before the manifest
+    # commit leaves files without an entry: the next append must count
+    # them, so ``rows`` agrees with what the stage reads back
+    from namematch_spark.checkpoint import CheckpointManager
+    ck = CheckpointManager(str(tmp_path / "cku"))
+    ck.append("s", spark.range(10))
+    ck.manifest.pop("s")
+    ck._save_manifest()
+    out = ck.append("s", spark.range(10, 17))
+    assert ck.manifest["s"]["rows"] == out.count() == 17
+    # a direct write into the directory is counted the same way
+    spark.range(3).write.mode("append").parquet(ck.stage_path("s"))
+    out = ck.append("s", spark.range(4))
+    assert ck.manifest["s"]["rows"] == out.count() == 24
+    assert ck.manifest["s"]["batches"] == 2
 
 
 def test_checkpoint_resume(spark, tmp_path):
@@ -174,3 +204,125 @@ def test_checkpoint_resume(spark, tmp_path):
     ck2.write("stage_b", df, fingerprint="x")
     ck2.invalidate_downstream(["stage_a", "stage_b"], "stage_a")
     assert "stage_b" not in ck2.manifest
+
+
+def _readback_lineage(spark, path: str) -> tuple[list, str]:
+    """The formulation the footer lineage replaced: rows per input file
+    from a grouped read-back of the written stage."""
+    back = spark.read.parquet(path)
+    counts = (back.groupBy(F.input_file_name().alias("file"))
+              .agg(F.count("*").alias("rows")).collect())
+    return (sorted((os.path.basename(r["file"]), r["rows"])
+                   for r in counts),
+            back.schema.simpleString())
+
+
+@pytest.mark.parametrize("frame", ["one_empty_partition", "empty",
+                                   "single_file"])
+def test_footer_lineage_equals_readback(spark, tmp_path, frame):
+    from namematch_spark.checkpoint import CheckpointManager
+    base = {"one_empty_partition": spark.range(0, 40, 1, 4)
+            .filter(F.col("id") >= 10),          # partition 0 is empty
+            "empty": spark.range(0, 40, 1, 4).filter(F.col("id") < 0),
+            "single_file": spark.range(0, 25, 1, 1)}[frame]
+    df = base.select("id", F.col("id").cast("string").alias("s"),
+                     (F.col("id") / 3).alias("x"))
+    ck = CheckpointManager(str(tmp_path / "ck"))
+    out = ck.write("stage", df, fingerprint="f")
+    entry = ck.manifest["stage"]
+    parts, schema = _readback_lineage(spark, ck.stage_path("stage"))
+    assert sorted((p["file"], p["rows"]) for p in entry["partitions"]) \
+        == parts
+    assert entry["rows"] == sum(n for _, n in parts) == out.count()
+    assert entry["schema"] == schema
+    # the stored schema reads back as schema inference would
+    resumed = CheckpointManager(str(tmp_path / "ck")).load_or_compute(
+        spark, "stage", lambda: 1 / 0, fingerprint="f")
+    assert resumed.schema == out.schema \
+        == spark.read.parquet(ck.stage_path("stage")).schema
+
+
+class _Artifact:
+    """A model whose ``save`` writes in two steps and, with ``fail``,
+    dies between them, as a run killed mid-save would."""
+
+    def __init__(self, tag: str, fail: bool = False):
+        self.tag, self.fail = tag, fail
+
+    def save(self, path: str) -> None:
+        os.makedirs(path)
+        with open(os.path.join(path, "trees"), "w") as f:
+            f.write(self.tag)
+        if self.fail:
+            raise OSError("killed mid-save")
+        with open(os.path.join(path, "metadata"), "w") as f:
+            f.write(self.tag)
+
+
+def _load_artifact(path: str) -> str:
+    assert os.path.exists(os.path.join(path, "metadata")), \
+        "a partially written model was loaded"
+    return open(os.path.join(path, "trees")).read()
+
+
+def test_save_model_is_atomic(tmp_path, monkeypatch):
+    from namematch_spark import checkpoint
+    from namematch_spark.checkpoint import CheckpointManager
+    root = str(tmp_path / "ckm")
+
+    def resumed(fp):
+        # a resumed run reads the manifest back from disk
+        return CheckpointManager(root).load_model("m", _load_artifact, fp)
+
+    ck = CheckpointManager(root)
+    with pytest.raises(OSError):
+        ck.save_model("m", _Artifact("v1", fail=True), {"t": 1}, "f1")
+    assert resumed("f1") == (None, None)
+    ck.save_model("m", _Artifact("v1"), {"t": 1}, "f1")
+    assert resumed("f1") == ("v1", {"t": 1})
+    # a later save dies partway: the previous complete model stays
+    with pytest.raises(OSError):
+        ck.save_model("m", _Artifact("v2", fail=True), {"t": 2}, "f2")
+    assert resumed("f1") == ("v1", {"t": 1})
+    assert resumed("f2") == (None, None)
+    # killed while the new artifact replaces the old one: no model
+    real_replace = checkpoint.os.replace
+
+    def dies_on_swap(src, dst):
+        if src.endswith(".tmp-m"):
+            raise OSError("killed mid-swap")
+        real_replace(src, dst)
+    monkeypatch.setattr(checkpoint.os, "replace", dies_on_swap)
+    with pytest.raises(OSError):
+        ck.save_model("m", _Artifact("v2"), {"t": 2}, "f2")
+    monkeypatch.undo()
+    assert resumed("f1") == (None, None)
+    assert resumed("f2") == (None, None)
+    ck.save_model("m", _Artifact("v2"), {"t": 2}, "f2")
+    assert resumed("f2") == ("v2", {"t": 2})
+
+
+#: Spark jobs of a checkpointed resume from the data-rows stage on the
+#: sf0.001 fixture: load the four stages, fit and save both match
+#: models, score, cluster and commit.  Commits with a read-back and the
+#: signature-checked CC loop took 97 jobs here; footer lineage,
+#: stored schemas, the shared labeled count and the exact CC fixed-point
+#: test bring it to the ceiling below.  Raise it only for a new stage.
+RESUME_JOB_CEILING = 45
+
+
+def test_checkpointed_resume_job_ceiling(spark, tmp_path):
+    from namematch_spark.pipeline import PipelineConfig, run_pipeline
+    from namematch_spark.sources.records import person_records
+    cfg = PipelineConfig(checkpoint_dir=str(tmp_path / "ck"))
+    records = person_records(spark, SF_SMALL)
+    run_pipeline(records, cfg, stop_after="data_rows")
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job() -> int:
+        return max(tracker.getJobIdsForGroup(None) or [-1])
+    before = last_job()
+    res = run_pipeline(records, cfg)
+    jobs = last_job() - before
+    assert set(res.metrics["stages"]) >= {"data_rows", "clusters"}
+    assert jobs <= RESUME_JOB_CEILING, jobs

@@ -236,3 +236,69 @@ def test_ngram_length_bound_equals_unpruned_chain(spark):
            .select("doc_id_1", "doc_id_2", "jaccard"))
     assert new.count() > 0
     assert _sym_diff(new, old) == 0
+
+
+@pytest.mark.parametrize("threshold", [0.35, 0.7])
+def test_minhash_length_bound_equals_unpruned_chain(spark, threshold):
+    """r6: minhash_lsh_dedup carries each document's shingle count
+    through the band rows and applies the J ≤ min/max length bound to
+    the candidate pairs before the shingle arrays are joined on.  Equal
+    to the r5 formulation (2-column distinct, sizes from the joined
+    arrays, the ratio filter after the signature joins) on the sf0.001
+    documents corpus plus nested prefixes of synthetic documents: a
+    prefix's shingles are a subset of the longer text's, so J equals
+    the length ratio exactly and pairs sit on the bound itself."""
+    from namematch_spark.operators import blocking as B
+    from namematch_spark.operators.dedup import (minhash_lsh_dedup,
+                                                 word_shingles)
+    nested = [(10_000 + 100 * k + n,
+               " ".join(f"w{k}x{i}" for i in range(n)))
+              for k in range(4) for n in (8, 10, 12, 16, 20, 24, 30, 40)]
+    docs = (spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+            .select("doc_id", "text")
+            .unionByName(spark.createDataFrame(nested,
+                                               "doc_id long, text string")))
+    num_hashes, rows_per_band, max_bucket = 16, 2, 5000
+    new = minhash_lsh_dedup(docs, threshold=threshold,
+                            num_hashes=num_hashes,
+                            rows_per_band=rows_per_band,
+                            max_bucket=max_bucket)
+
+    hs = F.transform(word_shingles("text", 3), lambda s: F.pmod(
+        B.portable_hash64(s), F.lit(B.MERSENNE_P)))
+    base = (docs.select("doc_id", hs.alias("__hs"))
+            .filter(F.size("__hs") > 0))
+    sig = base.select("doc_id", "__hs", F.array(*[
+        F.array_min(F.transform("__hs", lambda h: F.pmod(
+            F.lit(a) * h + F.lit(b), F.lit(B.MERSENNE_P))))
+        for a, b in B._lcg_pairs(num_hashes)]).alias("__sig"))
+    band_rows = sig.select("doc_id", F.explode(F.transform(
+        F.sequence(F.lit(0), F.lit(num_hashes // rows_per_band - 1)),
+        lambda bnd: F.struct(bnd.alias("band"), F.concat_ws("_", F.slice(
+            "__sig", bnd * rows_per_band + 1, rows_per_band))
+            .alias("bkey")))).alias("bb")) \
+        .select("doc_id", "bb.band", "bb.bkey")
+    sizes = band_rows.groupBy("band", "bkey").agg(F.count("*").alias("n"))
+    pruned = (band_rows.join(sizes, ["band", "bkey"])
+              .filter((F.col("n") > 1) & (F.col("n") <= max_bucket)))
+    l, r = pruned.alias("l"), pruned.alias("r")
+    cand = (l.join(r, ["band", "bkey"])
+            .filter(F.col("l.doc_id") < F.col("r.doc_id"))
+            .select(F.col("l.doc_id").alias("doc_id_1"),
+                    F.col("r.doc_id").alias("doc_id_2"))
+            .distinct())
+    n1, n2 = F.size("__h1"), F.size("__h2")
+    old = (cand
+           .join(sig.select(F.col("doc_id").alias("doc_id_1"),
+                            F.col("__hs").alias("__h1")), "doc_id_1")
+           .join(sig.select(F.col("doc_id").alias("doc_id_2"),
+                            F.col("__hs").alias("__h2")), "doc_id_2")
+           .filter(F.round(F.least(n1, n2).cast("double")
+                           / F.greatest(n1, n2), 6) >= threshold)
+           .withColumn("__i", F.size(F.array_intersect("__h1", "__h2")))
+           .withColumn("jaccard", F.round(
+               F.col("__i").cast("double") / (n1 + n2 - F.col("__i")), 6))
+           .filter(F.col("jaccard") >= threshold)
+           .select("doc_id_1", "doc_id_2", "jaccard"))
+    assert new.count() > 0
+    assert _sym_diff(new, old) == 0
