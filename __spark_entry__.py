@@ -199,22 +199,24 @@ def q_er_pair_features(spark, sf):
 
 
 def q_er_nameprob_features(spark, sf):
+    """Six percentile features + F12 swap repair through the data-rows
+    stage's fused per-name dim, plus log P of the original side-1 name."""
     from namematch_spark.operators import nameprob as NP
-    from namematch_spark.operators.pairs import PCTL_FEATURE_COLS
+    from namematch_spark.operators.pairs import (PCTL_FEATURE_COLS,
+                                                 _attach_name_prob_features)
     an = _eager(_an(spark, sf))
     anf = an.filter(F.col("drop_from_nm") == 0)
     rp = expand_bs_to_record_pairs(
         B.candidate_blockstring_pairs(an), an)
     probs = _eager(NP.name_log_probs(anf, NP.ngram_counts(anf)))
-    dims = NP.percentile_dims(anf)
-    base = NP.pctl_pair_features(rp, dims)
     lp = probs.select(F.col("name_prob_str").alias("__s1p"),
                       F.round("log_prob", 6).alias("log_prob_name_1"))
-    base = base.join(
+    # joined on the names as they are before the swap repair
+    rp = rp.join(
         lp,
         NP.name_prob_str(F.col("first_name_1"), F.col("last_name_1"))
         == F.col("__s1p"), "left").drop("__s1p")
-    swapped = NP.swap_repair(base, probs)
+    swapped = _attach_name_prob_features(rp, NP.percentile_dims(anf), probs)
     return swapped.select("dr_id", *PCTL_FEATURE_COLS,
                           "switched_name", "log_prob_name_1")
 
@@ -487,18 +489,17 @@ _CFG_ROUND = {"var_first_name_jw_dist", "var_last_name_jw_dist",
 
 def q_er_config_pair_features(spark, sf):
     from namematch_spark.configs import demo_schema
-    from namematch_spark.operators.pairs import (
-        expand_bs_pairs_for_schema, pair_features_with_schema)
     sch = demo_schema()
     an = _eager(_cfg_an(spark, sf))
     cand = B.candidate_blockstring_pairs(an)
-    attrs = ([v.name for v in sch.feature_variables()
-              if v.compare_type != "Address"]
+    variables = [(v.name, v.compare_type) for v in sch.feature_variables()]
+    attrs = ([n for n, t in variables if t != "Address"]
              + ["address_street_number", "address_street_name",
                 "address_street_type"]
              + sch.uid_vars())
-    rp = _eager(expand_bs_pairs_for_schema(cand, an, attrs))
-    dr = pair_features_with_schema(rp, sch, leven_thresh=1)
+    rp = _eager(expand_bs_to_record_pairs(cand, an, extra_attrs=attrs))
+    dr = pair_features(rp, variables=variables, uid_cols=sch.uid_vars(),
+                       leven_thresh=1)
     return dr.select(
         *[F.round(c, 6).alias(c) if c in _CFG_ROUND else F.col(c)
           for c in CFG_FEATURE_ORACLE_COLS])

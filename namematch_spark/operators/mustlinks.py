@@ -18,17 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def uid_cardinality(all_names: DataFrame, uid_col: str = "uid") -> DataFrame:
-    """A5 — records per uid, for skew monitoring
-    (``generate_must_links.py:148-158``)."""
-    return (
-        all_names
-        .filter((F.col(uid_col) != "") & (F.col("drop_from_nm") == 0))
-        .groupBy(uid_col)
-        .agg(F.count("*").alias("n_records"))
-    )
-
-
 def _must_links_one(all_names: DataFrame, uid_col: str,
                     max_records_per_uid: int) -> DataFrame:
     """Self-join on one UniqueID variable (one iteration of the

@@ -18,27 +18,26 @@ Three capabilities, each re-expressed as distributed DataFrame ops:
   computed then dropped).
 * **F12 — first/last swap repair**: if the reversed name is closer in
   edit distance, swap fn/ln of the *less probable* side
-  (``comparison_functions.py:77-146``) — native expressions over a
-  broadcast-joined per-name probability dim.
+  (``comparison_functions.py:77-146``).  The percentile lookups and the
+  swap run in the data-rows stage, fused into one per-name dim join per
+  pair side (:func:`pairs._attach_name_prob_features`); this module
+  builds the dims.
 
 **A8 — edit-op probabilities** (``counter.py:5-19``) is quadratic in
 the sample by construction (editops over all name pairs); the reference
-runs it driver-side on a subsample (``nm_prob.py:76-86``) and this
-engine does the same (:func:`edit_op_probs`), feeding the pairwise
-``prob_same_person`` (``counter.py:46-77``) through an Arrow UDF over
-*distinct* name pairs.
+runs it driver-side on a subsample (``nm_prob.py:76-86``) and
+:func:`edit_op_probs` does the same.  Nothing in the pipeline consumes
+it: the reference's pairwise ``prob_same_person`` (``counter.py:46-77``)
+is not among the data-rows features it keeps.
 """
 
 from __future__ import annotations
 
-import math
 from collections import defaultdict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from namematch_spark.operators.pairs import dim_join_side
 
 SMOOTHING = 0.001   # reference nm_prob.py:16
 NGRAM_LEN = 5       # reference nm_prob.py:10
@@ -186,92 +185,6 @@ def percentile_dims(all_names: DataFrame,
     }
 
 
-def swap_repair(record_pairs: DataFrame, probs: DataFrame,
-                fn_col: str = "first_name", ln_col: str = "last_name"
-                ) -> DataFrame:
-    """F12 — repair swapped first/last names
-    (``comparison_functions.py:77-146``): when
-    ``ed(rev(name1), name2) < ed(name1, name2)``, the LESS probable
-    side's fn/ln are swapped.  Adds ``switched_name`` (0/1/2) and
-    rewrites the four name columns in place; all native expressions
-    plus two dim joins against the per-name probability dim.
-    """
-    p1 = probs.select(F.col("name_prob_str").alias("__nps1"),
-                      F.col("prob").alias("__prob1"))
-    p2 = probs.select(F.col("name_prob_str").alias("__nps2"),
-                      F.col("prob").alias("__prob2"))
-    fn1, fn2 = F.col(f"{fn_col}_1"), F.col(f"{fn_col}_2")
-    ln1, ln2 = F.col(f"{ln_col}_1"), F.col(f"{ln_col}_2")
-    df = (
-        record_pairs
-        # per-name probability dim ~ O(distinct names): strategy via
-        # pairs.dim_join_side (AQE decides when on; explicit broadcast
-        # only under pinned AQE-off plans)
-        .join(dim_join_side(record_pairs, p1),
-              name_prob_str(fn1, ln1) == F.col("__nps1"), "left")
-        .join(dim_join_side(record_pairs, p2),
-              name_prob_str(fn2, ln2) == F.col("__nps2"), "left")
-    )
-    name_ed = F.levenshtein(F.concat(fn1, ln1), F.concat(fn2, ln2))
-    rev_ed = F.levenshtein(F.concat(ln1, fn1), F.concat(fn2, ln2))
-    least_likely = (F.col("__prob2") < F.col("__prob1")).cast("int") + 1
-    switched = F.when(rev_ed < name_ed, least_likely).otherwise(F.lit(0))
-    df = df.withColumn("switched_name", switched)
-    sw = F.col("switched_name")
-    return (
-        df
-        .withColumn("__nfn1", F.when(sw == 1, ln1).otherwise(fn1))
-        .withColumn("__nln1", F.when(sw == 1, fn1).otherwise(ln1))
-        .withColumn("__nfn2", F.when(sw == 2, ln2).otherwise(fn2))
-        .withColumn("__nln2", F.when(sw == 2, fn2).otherwise(ln2))
-        .drop(f"{fn_col}_1", f"{fn_col}_2", f"{ln_col}_1", f"{ln_col}_2",
-              "__nps1", "__nps2", "__prob1", "__prob2")
-        .withColumnRenamed("__nfn1", f"{fn_col}_1")
-        .withColumnRenamed("__nln1", f"{ln_col}_1")
-        .withColumnRenamed("__nfn2", f"{fn_col}_2")
-        .withColumnRenamed("__nln2", f"{ln_col}_2")
-    )
-
-
-def pctl_pair_features(record_pairs: DataFrame, dims: dict[str, DataFrame],
-                       fn_col: str = "first_name",
-                       ln_col: str = "last_name") -> DataFrame:
-    """The six kept name-prob features
-    (``generate_data_rows.py:253-259``): abs-diff and max of each
-    percentile across the pair.  One dim join per side per dim (no
-    forced broadcast — the dims grow with distinct names; AQE picks
-    broadcast vs shuffle at runtime)."""
-    fn1 = F.regexp_replace(F.col(f"{fn_col}_1"), " ", "")
-    fn2 = F.regexp_replace(F.col(f"{fn_col}_2"), " ", "")
-    ln1 = F.regexp_replace(F.col(f"{ln_col}_1"), " ", "")
-    ln2 = F.regexp_replace(F.col(f"{ln_col}_2"), " ", "")
-    keys = {
-        "name": (name_prob_str(F.col(f"{fn_col}_1"), F.col(f"{ln_col}_1")),
-                 name_prob_str(F.col(f"{fn_col}_2"), F.col(f"{ln_col}_2")),
-                 "count_pctl_name"),
-        "fn": (fn1, fn2, "count_pctl_fn"),
-        "ln": (ln1, ln2, "count_pctl_ln"),
-    }
-    df = record_pairs
-    for k, (k1, k2, col) in keys.items():
-        d1 = dims[k].select(F.col("value").alias("__v1"),
-                            F.col(col).alias("__p1"))
-        d2 = dims[k].select(F.col("value").alias("__v2"),
-                            F.col(col).alias("__p2"))
-        df = (
-            df
-            # percentile dims ~ O(distinct names): pairs.dim_join_side
-            .join(dim_join_side(df, d1), k1 == F.col("__v1"), "left")
-            .join(dim_join_side(df, d2), k2 == F.col("__v2"), "left")
-            .withColumn(f"diff_count_pctl_{k}",
-                        F.abs(F.col("__p1") - F.col("__p2")))
-            .withColumn(f"max_count_pctl_{k}",
-                        F.greatest("__p1", "__p2"))
-            .drop("__v1", "__p1", "__v2", "__p2")
-        )
-    return df
-
-
 # ---------------------------------------------------------------------------
 # A8 — edit-op probabilities (driver-side sampled, like the reference)
 # ---------------------------------------------------------------------------
@@ -323,44 +236,3 @@ def edit_op_probs(names: list[str]) -> tuple[dict, int]:
                 edit_count[op] += 1
                 total += 1
     return dict(edit_count), total
-
-
-def prob_same_person_pandas(names1, names2, ngram_count: dict,
-                            edit_count: dict, total_edits: int,
-                            pop_size: int,
-                            smoothing: float = SMOOTHING):
-    """Vectorized ``probSamePerson`` (``counter.py:46-77``) for use in
-    an Arrow UDF over *distinct* name pairs: P(same) =
-    p₁·P(n₂|n₁) / ((pop−1)·p₁·p₂ + p₁·P(n₂|n₁))."""
-    import pandas as pd
-
-    memo_p: dict[str, float] = {}
-
-    def prob_name(name: str) -> float:
-        if len(name) < NGRAM_LEN:
-            return 0.0
-        if name not in memo_p:
-            lp = 0.0
-            for s in range(len(name) - (NGRAM_LEN - 1)):
-                num = ngram_count.get(name[s:s + NGRAM_LEN], 0) + smoothing
-                den = ngram_count.get(name[s:s + NGRAM_LEN - 1], 0) \
-                    + smoothing
-                lp += math.log(num / den)
-            memo_p[name] = math.exp(lp)
-        return memo_p[name]
-
-    def cond_prob(n1: str, n2: str) -> float:
-        lp = 0.0
-        for op in editops(n1, n2):
-            lp += math.log(
-                (edit_count.get(op, 0) / total_edits if total_edits else 0)
-                + smoothing)
-        return math.exp(lp)
-
-    out = []
-    for n1, n2 in zip(names1, names2):
-        p1, p2 = prob_name(n1), prob_name(n2)
-        p2g1 = cond_prob(n1, n2)
-        den = (pop_size - 1.0) * p1 * p2 + p1 * p2g1
-        out.append((p1 * p2g1) / den if den else 0.0)
-    return pd.Series(out)

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from namematch_spark.functions.strings import jw_dist_series, nysiis_eq_series
+from namematch_spark.operators.nameprob import name_prob_str
 
 
 def dim_join_side(parent: DataFrame, d: DataFrame) -> DataFrame:
@@ -58,8 +59,8 @@ def expand_bs_to_record_pairs(cand_bs: DataFrame, all_names: DataFrame,
     :func:`blocking.candidate_blockstring_pairs`.
 
     ``extra_attrs``: additional all-names columns to carry side-by-side
-    (e.g. secondary UniqueID variables for the multi-uid consensus
-    label).
+    — a config schema's variables, or secondary UniqueID variables for
+    the multi-uid consensus label.
 
     Records-per-blockstring is near 1 in realistic data (name+dob is
     almost a person key), so this expansion is ~linear — the quadratic
@@ -90,42 +91,6 @@ def expand_bs_to_record_pairs(cand_bs: DataFrame, all_names: DataFrame,
         .join(side2, "blockstring_2")
         .filter(
             (F.col("blockstring_1") != F.col("blockstring_2"))
-            | (F.col("record_id_1") < F.col("record_id_2")))
-    )
-    return pairs.withColumn(
-        "dr_id", F.concat_ws("__", "record_id_1", "record_id_2"))
-
-
-def expand_to_record_pairs(cand_nn: DataFrame, all_names: DataFrame
-                           ) -> DataFrame:
-    """J6 + J7 — name pairs × records → side-by-side record pairs.
-
-    Output: one row per unordered record pair, with ``_1``/``_2``
-    suffixed attribute columns.  Self pairs are dropped and same-name
-    pairs are canonicalized by record_id (``generate_data_rows.py:
-    196-202``).
-    """
-    attrs = ["record_id", "first_name", "last_name", "dob", "gender",
-             "age", "uid", "blockstring"]
-    an = (
-        all_names
-        .filter(F.col("drop_from_nm") == 0)
-        .withColumn("nn_string",
-                    F.concat_ws(" ", "first_name", "last_name"))
-        .select("nn_string", *attrs)
-    )
-    side1 = an.select(
-        F.col("nn_string").alias("nn_string_1"),
-        *[F.col(a).alias(f"{a}_1") for a in attrs])
-    side2 = an.select(
-        F.col("nn_string").alias("nn_string_2"),
-        *[F.col(a).alias(f"{a}_2") for a in attrs])
-    pairs = (
-        cand_nn
-        .join(side1, "nn_string_1")
-        .join(side2, "nn_string_2")
-        .filter(
-            (F.col("nn_string_1") != F.col("nn_string_2"))
             | (F.col("record_id_1") < F.col("record_id_2")))
     )
     return pairs.withColumn(
@@ -241,34 +206,14 @@ def features_for_variables(variables: list[tuple[str, str]]
     return feats, string_vars
 
 
-def _py_string_features_impl(fn1: pd.Series, fn2: pd.Series,
-                             ln1: pd.Series, ln2: pd.Series
-                             ) -> pd.DataFrame:
-    """F5 + F6 — the two metrics Spark lacks, in one Arrow batch pass."""
-    return pd.DataFrame({
-        "jw_fn": jw_dist_series(fn1, fn2),
-        "jw_ln": jw_dist_series(ln1, ln2),
-        "nysiis_fn": nysiis_eq_series(fn1, fn2),
-        "nysiis_ln": nysiis_eq_series(ln1, ln2),
-    })
-
-
-def _py_string_features(*cols):
-    # udf creation is deferred: the DDL return type needs a live session
-    udf = pandas_udf(
-        "jw_fn double, jw_ln double, nysiis_fn double, nysiis_ln double"
-    )(_py_string_features_impl)
-    return udf(*cols)
-
-
-def label_expr(leven_thresh: int | None = None) -> Column:
-    """F14 — 3-state label from the uid pair
+def label_expr_for(uid_var: str, leven_thresh: int | None = None) -> Column:
+    """F14 — 3-state label from the ``{uid_var}_1/_2`` pair
     (``comparison_functions.py:349-396``): ``'1'`` both present & equal,
     ``'0'`` both present & different, ``''`` otherwise.  With
     ``leven_thresh``, near-identical uids (possible typos) are demoted
     from ``'0'`` to ``''``.
     """
-    u1, u2 = F.col("uid_1"), F.col("uid_2")
+    u1, u2 = F.col(f"{uid_var}_1"), F.col(f"{uid_var}_2")
     base = (
         F.when((u1 == "") | (u2 == ""), F.lit(""))
         .when(u1 == u2, F.lit("1"))
@@ -364,36 +309,29 @@ PCTL_FEATURE_COLS = [
 
 def _attach_name_prob_features(record_pairs: DataFrame,
                                pctl_dims: dict | None,
-                               name_probs: DataFrame | None,
-                               fn_col: str = "first_name",
-                               ln_col: str = "last_name") -> DataFrame:
-    """Fused name-probability stage for the data-rows path: the same
-    values as :func:`nameprob.pctl_pair_features` (six percentile
-    features over the ORIGINAL names) followed by
-    :func:`nameprob.swap_repair` (flip fn/ln of the less probable side
-    when the reversed name is closer), but with the per-name lookups
-    collapsed into ONE dim join per pair side.
+                               name_probs: DataFrame | None) -> DataFrame:
+    """Name-probability stage of the data rows (reference
+    ``generate_data_rows.py:226-259``, ``comparison_functions.py:
+    77-146``): six percentile features over the ORIGINAL names, then the
+    F12 swap repair — when the reversed name is closer in edit distance,
+    flip fn/ln of the less probable side (``switched_name`` 0/1/2).
 
-    The unfused chain joins the pair stream EIGHT times (2 sides × 3
-    percentile dims + 2 probability joins).  Every lookup key is a
-    function of the side's ``(first_name, last_name)``, so one
-    ``(fn, ln) → (pctl_name, pctl_fn, pctl_ln, prob)`` dim — built by
-    joining the tiny dims against the distinct name pairs — carries
-    all of them: 8 passes over the largest table of the stage become
-    2, with bit-identical feature values (the per-key lookup results
-    are unchanged; only the join count changes).  The standalone
-    nameprob functions stay as-is for the oracle-checked
-    ``er_nameprob_features`` surface.
+    Every lookup key is a function of a side's ``(first_name,
+    last_name)``, so one ``(fn, ln) → (pctl_name, pctl_fn, pctl_ln,
+    prob)`` dim — built by joining the tiny dims against the distinct
+    name pairs — carries all of them: ONE dim join per pair side instead
+    of one per side per lookup (8 passes over the largest table of the
+    stage become 2).  ``tests/test_r06_equivalence.py`` checks it
+    against the one-join-per-lookup chain.
     """
     from namematch_spark.operators.blocking import _scoped_cache
-    from namematch_spark.operators.nameprob import name_prob_str
 
     names = (
-        record_pairs.select(F.col(f"{fn_col}_1").alias("__fn"),
-                            F.col(f"{ln_col}_1").alias("__ln"))
+        record_pairs.select(F.col("first_name_1").alias("__fn"),
+                            F.col("last_name_1").alias("__ln"))
         .unionByName(
-            record_pairs.select(F.col(f"{fn_col}_2").alias("__fn"),
-                                F.col(f"{ln_col}_2").alias("__ln")))
+            record_pairs.select(F.col("first_name_2").alias("__fn"),
+                                F.col("last_name_2").alias("__ln")))
         .distinct()
     )
     dim = names
@@ -425,8 +363,8 @@ def _attach_name_prob_features(record_pairs: DataFrame,
     d2 = dim.select(F.col("__fn").alias("__dfn2"),
                     F.col("__ln").alias("__dln2"),
                     *[F.col(c).alias(f"__{c}_2") for c in carry])
-    fn1, fn2 = F.col(f"{fn_col}_1"), F.col(f"{fn_col}_2")
-    ln1, ln2 = F.col(f"{ln_col}_1"), F.col(f"{ln_col}_2")
+    fn1, fn2 = F.col("first_name_1"), F.col("first_name_2")
+    ln1, ln2 = F.col("last_name_1"), F.col("last_name_2")
     df = (
         record_pairs
         .join(dim_join_side(record_pairs, d1),
@@ -444,7 +382,6 @@ def _attach_name_prob_features(record_pairs: DataFrame,
         df = df.drop(*[f"__count_pctl_{k}_{s}" for k in ("name", "fn", "ln")
                        for s in (1, 2)])
     if name_probs is not None:
-        # identical arithmetic to nameprob.swap_repair
         name_ed = F.levenshtein(F.concat(fn1, ln1), F.concat(fn2, ln2))
         rev_ed = F.levenshtein(F.concat(ln1, fn1), F.concat(fn2, ln2))
         least_likely = (F.col("__prob_2") < F.col("__prob_1")) \
@@ -459,14 +396,21 @@ def _attach_name_prob_features(record_pairs: DataFrame,
             .withColumn("__nln1", F.when(sw == 1, fn1).otherwise(ln1))
             .withColumn("__nfn2", F.when(sw == 2, ln2).otherwise(fn2))
             .withColumn("__nln2", F.when(sw == 2, fn2).otherwise(ln2))
-            .drop(f"{fn_col}_1", f"{fn_col}_2", f"{ln_col}_1",
-                  f"{ln_col}_2", "__prob_1", "__prob_2")
-            .withColumnRenamed("__nfn1", f"{fn_col}_1")
-            .withColumnRenamed("__nln1", f"{ln_col}_1")
-            .withColumnRenamed("__nfn2", f"{fn_col}_2")
-            .withColumnRenamed("__nln2", f"{ln_col}_2")
+            .drop("first_name_1", "first_name_2", "last_name_1",
+                  "last_name_2", "__prob_1", "__prob_2")
+            .withColumnRenamed("__nfn1", "first_name_1")
+            .withColumnRenamed("__nln1", "last_name_1")
+            .withColumnRenamed("__nfn2", "first_name_2")
+            .withColumnRenamed("__nln2", "last_name_2")
         )
     return df
+
+
+#: The person data rows' variables, (name, compare_type) as in a config
+#: schema; their features are :data:`FEATURE_COLS`.
+PERSON_VARIABLES = [("first_name", "String"), ("last_name", "String"),
+                    ("dob", "Date"), ("age", "Numeric"),
+                    ("gender", "Categorical")]
 
 
 def pair_features(record_pairs: DataFrame,
@@ -476,16 +420,23 @@ def pair_features(record_pairs: DataFrame,
                   pctl_dims: dict | None = None,
                   name_probs: DataFrame | None = None,
                   jw_variant: str = "standard",
-                  uid_cols: list[str] | None = None) -> DataFrame:
+                  uid_cols: list[str] | None = None,
+                  variables: list[tuple[str, str]] = PERSON_VARIABLES
+                  ) -> DataFrame:
     """Full feature table over side-by-side record pairs (the
     "data-rows" table, ``generate_data_rows.py:182-190``).
 
+    ``variables``: ``(name, compare_type)`` pairs, dispatched by
+    :func:`features_for_variables` — the person list by default, or a
+    config schema's feature variables; ``record_pairs`` must carry each
+    ``{name}_1/_2`` (``expand_bs_to_record_pairs(..., extra_attrs=…)``).
+
     ``uid_cols``: the UniqueID variable(s) the label derives from
-    (default ``["uid"]``).  With several, the label is the reference's
-    consensus — '1'/'0' only when every usable variable agrees
-    (:func:`label_expr_multi`, ``comparison_functions.py:389-396``);
-    ``record_pairs`` must then carry each ``{var}_1/_2`` pair (use
-    ``expand_bs_to_record_pairs(..., extra_attrs=uid_cols)``).
+    (default ``["uid"]``); ``uid_1``/``uid_2`` come from the first.  The
+    label is the reference's consensus — '1'/'0' only when every usable
+    variable agrees (:func:`label_expr_multi`,
+    ``comparison_functions.py:389-396``), which for one variable is its
+    plain 3-state label.
 
     Optional name-probability stage (reference order,
     ``generate_data_rows.py:226-259``): percentile features are looked
@@ -504,9 +455,6 @@ def pair_features(record_pairs: DataFrame,
         # generate_data_rows / fit_model, fit_model.py:734)
         extra_cols.append("covered_pair")
     if pctl_dims is not None or name_probs is not None:
-        # fused per-name dim: 8 joins over the pair stream -> 2 (see
-        # _attach_name_prob_features; values bit-identical to the
-        # pctl_pair_features + swap_repair chain)
         record_pairs = _attach_name_prob_features(
             record_pairs, pctl_dims, name_probs)
         if pctl_dims is not None:
@@ -514,27 +462,19 @@ def pair_features(record_pairs: DataFrame,
         if name_probs is not None:
             extra_cols += ["switched_name"]
 
-    feats: list[Column] = []
-    for v in ("first_name", "last_name"):
-        feats += string_features(v)
-    feats += date_features("dob")
-    feats += numeric_features("age")
-    feats += categorical_features("gender")
-
+    feats, string_vars = features_for_variables(variables)
+    carried = [f"{v}_{s}" for v in string_vars for s in (1, 2)]
+    uid = uid_cols[0]
     base = record_pairs.select(
         "dr_id", "record_id_1", "record_id_2", "cos_dist",
-        "uid_1", "uid_2", *extra_cols,
-        F.col("first_name_1"), F.col("first_name_2"),
-        F.col("last_name_1"), F.col("last_name_2"),
-        *feats,
+        F.col(f"{uid}_1").alias("uid_1"), F.col(f"{uid}_2").alias("uid_2"),
+        *extra_cols, *carried, *feats,
         exactmatch_expr(exact_vars, negate_exact_vars)
         .alias("exactmatch"),
-        (label_expr(leven_thresh) if uid_cols == ["uid"]
-         else label_expr_multi(uid_cols, leven_thresh)).alias("label"))
+        label_expr_multi(uid_cols, leven_thresh).alias("label"))
 
-    dim = _py_metrics_dim(record_pairs, ["first_name", "last_name"],
-                          jw_variant=jw_variant)
-    for v in ("first_name", "last_name"):
+    dim = _py_metrics_dim(record_pairs, string_vars, jw_variant=jw_variant)
+    for v in string_vars:
         d = dim.select(
             F.col("__s1"), F.col("__s2"),
             F.col("__jw").alias(f"var_{v}_jw_dist"),
@@ -546,102 +486,9 @@ def pair_features(record_pairs: DataFrame,
 
     return (
         base
-        .drop("first_name_1", "first_name_2", "last_name_1", "last_name_2")
+        .drop(*carried)
         .withColumn("labeled_data", (F.col("label") != "").cast("int"))
     )
-
-
-def expand_bs_pairs_for_schema(cand_bs: DataFrame, all_names: DataFrame,
-                               attrs: list[str],
-                               cos_vars: tuple[str, ...] = ("first_name",
-                                                            "last_name"),
-                               ed_var: str = "dob") -> DataFrame:
-    """Schema-driven J6+J7: like :func:`expand_bs_to_record_pairs` but
-    carrying an arbitrary attribute list (the config's variables).
-    The join key is the *blocking* blockstring (``nn_string::ed``, the
-    key :func:`blocking.candidate_blockstring_pairs` emits)."""
-    an = (
-        all_names
-        .filter(F.col("drop_from_nm") == 0)
-        .withColumn("__bs", F.concat(
-            F.concat_ws(" ", *cos_vars), F.lit("::"), F.col(ed_var)))
-        .select("__bs", "record_id", *attrs)
-    )
-    side1 = an.select(
-        F.col("__bs").alias("blockstring_1"),
-        F.col("record_id").alias("record_id_1"),
-        *[F.col(a).alias(f"{a}_1") for a in attrs])
-    side2 = an.select(
-        F.col("__bs").alias("blockstring_2"),
-        F.col("record_id").alias("record_id_2"),
-        *[F.col(a).alias(f"{a}_2") for a in attrs])
-    pairs = (
-        cand_bs
-        .join(side1, "blockstring_1")
-        .join(side2, "blockstring_2")
-        .filter(
-            (F.col("blockstring_1") != F.col("blockstring_2"))
-            | (F.col("record_id_1") < F.col("record_id_2")))
-    )
-    return pairs.withColumn(
-        "dr_id", F.concat_ws("__", "record_id_1", "record_id_2"))
-
-
-def pair_features_with_schema(record_pairs: DataFrame, schema,
-                              leven_thresh: int | None = 1,
-                              jw_variant: str = "standard") -> DataFrame:
-    """Config-driven data-rows table: the feature set is whatever the
-    Schema declares (reference ``generate_data_rows.py:267-287``
-    dispatch), labels come from its UniqueID variable(s)."""
-    variables = [(v.name, v.compare_type)
-                 for v in schema.feature_variables()]
-    feats, string_vars = features_for_variables(variables)
-    uid_vars = schema.uid_vars()
-    keep = ["dr_id", "record_id_1", "record_id_2", "cos_dist"]
-    label_cols = []
-    if uid_vars:
-        uid = uid_vars[0]
-        keep += [F.col(f"{uid}_1").alias("uid_1"),
-                 F.col(f"{uid}_2").alias("uid_2")]
-        # consensus across ALL UniqueID variables (reference
-        # comparison_functions.py:389-396) — one variable degenerates
-        # to the single-uid label exactly
-        label_cols = [label_expr_multi(uid_vars, leven_thresh)
-                      .alias("label")]
-    carried = sorted({f"{v}_{s}" for v in string_vars for s in (1, 2)})
-    base = record_pairs.select(*keep, *carried, *feats, *label_cols)
-
-    dim = _py_metrics_dim(record_pairs, string_vars,
-                          jw_variant=jw_variant)
-    for v in string_vars:
-        d = dim.select(
-            F.col("__s1"), F.col("__s2"),
-            F.col("__jw").alias(f"var_{v}_jw_dist"),
-            F.col("__ny").alias(f"var_{v}_nysiis"))
-        base = base.join(
-            dim_join_side(base, d),
-            (F.col(f"{v}_1") == d.__s1) & (F.col(f"{v}_2") == d.__s2),
-            "left").drop("__s1", "__s2")
-    base = base.drop(*carried)
-    if label_cols:
-        base = base.withColumn("labeled_data",
-                               (F.col("label") != "").cast("int"))
-    return base
-
-
-def label_expr_for(uid_var: str, leven_thresh: int | None = None) -> Column:
-    """F14 for an arbitrary UniqueID variable name."""
-    u1, u2 = F.col(f"{uid_var}_1"), F.col(f"{uid_var}_2")
-    base = (
-        F.when((u1 == "") | (u2 == ""), F.lit(""))
-        .when(u1 == u2, F.lit("1"))
-        .otherwise(F.lit("0"))
-    )
-    if leven_thresh is None:
-        return base
-    return F.when(
-        (base == "0") & (F.levenshtein(u1, u2) <= leven_thresh), F.lit("")
-    ).otherwise(base)
 
 
 FEATURE_COLS = (

@@ -384,9 +384,3 @@ def run_pipeline(records: DataFrame,
         all_names=an, must_links=ml, candidate_nn_pairs=cand,
         data_rows=dr, model=model, potential_links=pl,
         clusters=clusters, metrics=metrics)
-
-
-def output_with_clusters(records: DataFrame, clusters: DataFrame
-                         ) -> DataFrame:
-    """G5 — final output join (``generate_output.py:104-172``)."""
-    return records.join(clusters, "record_id", "left")

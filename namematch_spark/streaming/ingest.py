@@ -6,9 +6,9 @@ as a stream, are preprocessed incrementally with the SAME narrow
 transforms as the batch path (one code path, two execution modes), and
 windowed arrival metrics are maintained with watermarked aggregation.
 
-Blocking/scoring stay micro-batch jobs over the accumulated table
-(foreachBatch), since LSH banding needs the full distinct-name state —
-the standard lambda-free design for entity resolution over streams.
+Blocking and scoring are not streamed: LSH banding needs the full
+distinct-name state, so they run as batch jobs over the accumulated
+records.
 """
 
 from __future__ import annotations
@@ -41,22 +41,4 @@ def arrival_stats(pages_stream: DataFrame,
              F.sum(F.length("text")).alias("total_chars"))
         .select(F.col("w.start").alias("window_start"),
                 "lang", "n_pages", "total_chars")
-    )
-
-
-def incremental_link(spark, accumulated_path: str, checkpoint: str,
-                     pages_stream: DataFrame):
-    """foreachBatch skeleton: append each micro-batch of preprocessed
-    records to the accumulated store; downstream blocking/scoring rerun
-    over it (checkpointed stages make that cheap — only changed stages
-    recompute)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(accumulated_path)
-
-    return (
-        pages_stream.writeStream
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
     )

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from namematch_spark.operators.pairs import label_expr
+from namematch_spark.operators.pairs import label_expr_for
 
 # the reference's ids.csv truth table: six uid pairs
 UID_PAIRS = [("1", "1"),   # match            -> '1'
@@ -20,7 +20,7 @@ UID_PAIRS = [("1", "1"),   # match            -> '1'
 def _labels(spark, leven_thresh):
     df = spark.createDataFrame(UID_PAIRS, "uid_1 string, uid_2 string")
     return [r["label"] for r in
-            df.withColumn("label", label_expr(leven_thresh))
+            df.withColumn("label", label_expr_for("uid", leven_thresh))
             .collect()]
 
 
@@ -67,10 +67,33 @@ def test_labels_multi_single_var_degenerates(spark):
     df = spark.createDataFrame(UID_PAIRS, "uid_1 string, uid_2 string")
     for thresh in (None, 1):
         single = [r["l"] for r in df.withColumn(
-            "l", label_expr(thresh)).collect()]
+            "l", label_expr_for("uid", thresh)).collect()]
         multi = [r["l"] for r in df.withColumn(
             "l", label_expr_multi(["uid"], thresh)).collect()]
         assert single == multi
+
+
+
+# sf0.001 data rows of the default pipeline (U3 flag, name-probability
+# features, person features, exact match, label), in order
+DATA_ROWS_COLS = [
+    "dr_id", "record_id_1", "record_id_2", "cos_dist", "uid_1", "uid_2",
+    "covered_pair",
+    "diff_count_pctl_name", "max_count_pctl_name",
+    "diff_count_pctl_fn", "max_count_pctl_fn",
+    "diff_count_pctl_ln", "max_count_pctl_ln",
+    "switched_name",
+    *[f"var_{v}_{m}" for v in ("first_name", "last_name")
+      for m in ("missing", "edit_dist", "exact_match", "exact_match_1st",
+                "exact_match_1st2nd3rd", "soundex")],
+    "var_dob_missing", "var_dob_edit_dist", "var_dob_day_diff",
+    "var_age_missing", "var_age_num_diff",
+    "var_gender_missing", "var_gender_exact_match",
+    "exactmatch", "label",
+    "var_first_name_jw_dist", "var_first_name_nysiis",
+    "var_last_name_jw_dist", "var_last_name_nysiis",
+    "labeled_data",
+]
 
 
 def test_feature_invariants(pipeline_result):
@@ -80,6 +103,8 @@ def test_feature_invariants(pipeline_result):
     # the nn-level expansion path this test used to build privately is
     # oracle-checked by the er_candidates contract query)
     dr = pipeline_result.data_rows
+    # the checkpoint/model contract: data-rows columns, in order
+    assert dr.columns == DATA_ROWS_COLS
     agg = dr.agg(
         F.count("*").alias("n"),
         F.sum((F.col("var_first_name_jw_dist") < 0).cast("int")).alias("neg"),

@@ -11,8 +11,8 @@ against a straightforward replica of the r5 formulation:
   (entries exact; norm2 — an unordered FP sum in r5 — to 1e-9);
 * cosine dot: try_element_at probe == map_zip_with merge (exact at
   the 6-decimal rounding both ship);
-* fused per-name dim in pair_features == pctl_pair_features +
-  swap_repair chain (exact);
+* fused per-name dim in pair_features == the one-join-per-lookup
+  percentile + swap-repair chain (exact);
 * window-based large/small-star CC == groupBy+join stars (exact
   assignment).
 """
@@ -132,6 +132,72 @@ def test_cosine_probe_equals_map_zip_with(spark, all_names):
     assert _sym_diff(new, old) == 0
 
 
+def _pctl_pair_features(record_pairs, dims):
+    """r5 replica: the six percentile features with one dim join per
+    side per dim (``generate_data_rows.py:253-259``)."""
+    from namematch_spark.operators.nameprob import name_prob_str
+
+    def nospace(c):
+        return F.regexp_replace(F.col(c), " ", "")
+
+    keys = {
+        "name": (name_prob_str(F.col("first_name_1"), F.col("last_name_1")),
+                 name_prob_str(F.col("first_name_2"), F.col("last_name_2"))),
+        "fn": (nospace("first_name_1"), nospace("first_name_2")),
+        "ln": (nospace("last_name_1"), nospace("last_name_2")),
+    }
+    df = record_pairs
+    for k, (k1, k2) in keys.items():
+        d1 = dims[k].select(F.col("value").alias("__v1"),
+                            F.col(f"count_pctl_{k}").alias("__p1"))
+        d2 = dims[k].select(F.col("value").alias("__v2"),
+                            F.col(f"count_pctl_{k}").alias("__p2"))
+        df = (
+            df
+            .join(d1, k1 == F.col("__v1"), "left")
+            .join(d2, k2 == F.col("__v2"), "left")
+            .withColumn(f"diff_count_pctl_{k}",
+                        F.abs(F.col("__p1") - F.col("__p2")))
+            .withColumn(f"max_count_pctl_{k}", F.greatest("__p1", "__p2"))
+            .drop("__v1", "__p1", "__v2", "__p2")
+        )
+    return df
+
+
+def _swap_repair(record_pairs, probs):
+    """r5 replica of F12 (``comparison_functions.py:77-146``): two
+    probability joins, then swap fn/ln of the LESS probable side when
+    the reversed name is closer in edit distance."""
+    from namematch_spark.operators.nameprob import name_prob_str
+    p1 = probs.select(F.col("name_prob_str").alias("__nps1"),
+                      F.col("prob").alias("__prob1"))
+    p2 = probs.select(F.col("name_prob_str").alias("__nps2"),
+                      F.col("prob").alias("__prob2"))
+    fn1, fn2 = F.col("first_name_1"), F.col("first_name_2")
+    ln1, ln2 = F.col("last_name_1"), F.col("last_name_2")
+    df = (record_pairs
+          .join(p1, name_prob_str(fn1, ln1) == F.col("__nps1"), "left")
+          .join(p2, name_prob_str(fn2, ln2) == F.col("__nps2"), "left"))
+    name_ed = F.levenshtein(F.concat(fn1, ln1), F.concat(fn2, ln2))
+    rev_ed = F.levenshtein(F.concat(ln1, fn1), F.concat(fn2, ln2))
+    least_likely = (F.col("__prob2") < F.col("__prob1")).cast("int") + 1
+    df = df.withColumn("switched_name", F.when(
+        rev_ed < name_ed, least_likely).otherwise(F.lit(0)))
+    sw = F.col("switched_name")
+    return (
+        df
+        .withColumn("__nfn1", F.when(sw == 1, ln1).otherwise(fn1))
+        .withColumn("__nln1", F.when(sw == 1, fn1).otherwise(ln1))
+        .withColumn("__nfn2", F.when(sw == 2, ln2).otherwise(fn2))
+        .withColumn("__nln2", F.when(sw == 2, fn2).otherwise(ln2))
+        .drop("first_name_1", "first_name_2", "last_name_1", "last_name_2")
+        .withColumnRenamed("__nfn1", "first_name_1")
+        .withColumnRenamed("__nln1", "last_name_1")
+        .withColumnRenamed("__nfn2", "first_name_2")
+        .withColumnRenamed("__nln2", "last_name_2")
+    )
+
+
 def test_fused_name_dim_equals_chain(spark, all_names):
     from namematch_spark.operators import blocking as B
     from namematch_spark.operators import nameprob as NP
@@ -150,8 +216,7 @@ def test_fused_name_dim_equals_chain(spark, all_names):
                        for k in ("name", "fn", "ln")],
             "switched_name",
             "first_name_1", "last_name_1", "first_name_2", "last_name_2"]
-    old = NP.swap_repair(NP.pctl_pair_features(rp, dims), probs) \
-        .select(*cols)
+    old = _swap_repair(_pctl_pair_features(rp, dims), probs).select(*cols)
     new = _attach_name_prob_features(rp, dims, probs).select(*cols)
     B.release_caches()
     assert new.count() == rp.count()
