@@ -26,9 +26,12 @@ def duck():
 
 
 @pytest.mark.parametrize("name", FEATURE_QUERIES)
-def test_feature_query_matches_oracle(spark, duck, name):
+def test_feature_query_matches_oracle(spark, duck, name, monkeypatch):
     import __spark_entry__ as E
     from namematch_spark.operators import blocking as B
+    # eager staging checkpoints instead of caching, so the queries leave
+    # no cached plan behind for later tests' plans to match
+    monkeypatch.delenv("NM_LAZY_CACHE", raising=False)
     sdf = E.queries()[name](spark, SF_SMALL).toPandas()
     B.release_caches()
     odf = duck.execute(E.oracle_sql()[name]).df()
